@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import family_hash, hash31, hash64
+from .similarity import _CURRENT_POINTER, publish_store_build
 
 # ---------------------------------------------------------------------------
 # normalization + shingling (shared by all text dedup)
@@ -77,18 +78,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     pat = r"(?=(" + r"\S+ " * (n - 1) + r"\S+))\S+ ?"
     windowed = F.regexp_extract_all(norm, F.lit(pat), 1)
     return F.when(F.size(windowed) == 0, F.array(norm)).otherwise(
-        F.array_distinct(windowed)
-    )
-
-
-def word_shingles_from_tokens(tokens: Column, n: int = 3) -> Column:
-    """n-word shingles from an already-tokenized array (compat shim for
-    callers that only have tokens; prefer word_shingles on the text)."""
-    windowed = F.transform(
-        F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-    )
-    return F.when(F.size(tokens) < n, F.array(F.concat_ws(" ", tokens))).otherwise(
         F.array_distinct(windowed)
     )
 
@@ -953,31 +942,6 @@ def embedding_near_pairs_against_index(
 # ---------------------------------------------------------------------------
 
 
-def simhash64_from_hashes(token_hashes: Column, n_tokens: Column) -> Column:
-    """64-bit SimHash from a *materialized* token-hash array: bit b of
-    the signature is 1 iff the sum over tokens of ±1 votes (sign of
-    token-hash bit b) is > 0, i.e. iff 2 * popcount_b > n_tokens.
-
-    64 independent scalar aggregates over the int array -- no per-token
-    64-element accumulator array to allocate (the naive fold rebuilds
-    one per token), and the ±1 vote reduces to a bit-count comparison.
-    """
-    sig = F.lit(0).cast("bigint")
-    for b in range(64):
-        # bit 63 is the two's-complement sign bit: its set-value is the
-        # min-long literal
-        bit_val = (1 << b) if b < 63 else -(1 << 63)
-        ones = F.aggregate(
-            token_hashes, F.lit(0), lambda acc, h: acc + F.getbit(h, F.lit(b))
-        )
-        sig = sig.bitwiseOR(
-            F.when(ones * 2 > n_tokens, F.lit(bit_val).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return sig
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1076,148 +1040,12 @@ def simhash_near_pairs(
 # X2d: duplicate-cluster resolution (connected components over dup pairs)
 # ---------------------------------------------------------------------------
 
-
-def duplicate_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    checkpoint_every: int = 5,
-    on_exhaustion: str = "star",
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components over an undirected duplicate-pair graph:
-    the post-pair stage every dedup pipeline runs so that A~B and B~C
-    collapse to ONE survivor (pairwise keep-lowest would keep A and B).
-
-    Min-label propagation to fixpoint: every node starts with the
-    smallest id among itself and its direct neighbors, then each
-    iteration takes the min over neighbors' labels.  Deterministic, so
-    the result is differentially checkable against a recursive-CTE
-    oracle.  Output: (doc_id, cluster_id) for every node of the pair
-    graph, cluster_id = min doc_id of its component.
-
-    Scale: each iteration is one shuffle join on node id; iterations
-    needed = graph diameter (dup clusters are shallow -- near-dup
-    components are cliques-ish, diameter < 5 in practice).  Frontiers
-    are persisted so the convergence probe doesn't recompute the chain,
-    and every `checkpoint_every` iterations the label frame is
-    localCheckpoint-ed to truncate lineage -- without that, each
-    iteration's plan nests the previous one and deep graphs OOM the
-    DRIVER during planning, not the executors during compute.  (On a
-    real cluster with executor loss, substitute a reliable
-    `checkpoint()` against the cluster FS.)  The label frame is 2
-    longs/node of the PAIR graph, not the corpus, so it fits executor
-    memory comfortably.
-
-    If labels are still moving after `max_iter` iterations, returning
-    them would silently split one duplicate cluster into several
-    (ADVICE r2 b), so the loop never returns unconverged labels.
-    Instead (VERDICT r4 item 2) `on_exhaustion` picks the recovery:
-
-    - "star" (default): fall back to `duplicate_clusters_star`, whose
-      O(log n) round count is diameter-independent -- at scale,
-      aborting a job after max_iter shuffle rounds when a correct
-      answer is computable is strictly worse than computing it.  The
-      fallback runs on the original `pairs` frame; the common shallow
-      case never reaches it (no extra jobs -- fallback only executes
-      after exhaustion).
-    - "raise": RuntimeError (the pre-r5 behavior, for callers that
-      treat a deep pair graph as a data-quality signal).
-
-    `stats`, if provided, is populated with {"iterations": rounds run,
-    "fell_back": bool} so tests (and operators wrapping this one) can
-    assert the shallow path stayed shallow.
-    """
-    if on_exhaustion not in ("star", "raise"):
-        raise ValueError(f"on_exhaustion must be 'star' or 'raise', got {on_exhaustion!r}")
-    # persist the symmetric edge list pre-partitioned on dst: every
-    # iteration joins on dst, so the cached partitioning is reused and
-    # only the (tiny) label frame moves per iteration
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .repartition("dst")
-        .persist()
-    )
-    labels = (
-        edges.groupBy("src")
-        .agg(F.least(F.col("src"), F.min("dst")).alias("lbl"))
-        .withColumnRenamed("src", "node")
-        .persist()
-    )
-    converged = False
-    for it in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-            ).alias("lbl"),
-        )
-        if (it + 1) % checkpoint_every == 0:
-            # truncate lineage: the checkpointed frame's plan is a leaf
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-        )
-        converged = changed.isEmpty()
-        labels.unpersist()
-        labels = new_labels
-        if converged:
-            if stats is not None:
-                stats["iterations"] = it + 1
-                stats["fell_back"] = False
-            break
-    if not converged:
-        # ADVICE r2 b: exiting with labels still moving means some
-        # component's min-label has not reached every node -- returning
-        # them would silently split one duplicate cluster into several.
-        labels.unpersist()
-        if stats is not None:
-            stats["iterations"] = max_iter
-            stats["fell_back"] = on_exhaustion == "star"
-        if on_exhaustion == "star":
-            # feed star the already-materialized symmetric edge frame
-            # rather than the raw pairs frame, whose lineage --
-            # typically the expensive pair-generation self-join --
-            # would otherwise recompute from scratch.  The frame is
-            # snapshotted into an eager localCheckpoint leaf (computed
-            # from the still-warm cache) so the label-prop persist can
-            # be released HERE instead of leaking for the process
-            # lifetime (ADVICE r5): checkpoint blocks are owned by the
-            # returned star frames' lineage and the ContextCleaner
-            # reclaims them once the caller drops those, the same
-            # lifetime convention as the returned label/star frames
-            # (2 longs per edge either way).
-            ckpt_edges = edges.select(
-                F.col("src").alias(id_a), F.col("dst").alias(id_b)
-            ).localCheckpoint(eager=True)
-            edges.unpersist()
-            return duplicate_clusters_star(ckpt_edges, id_a=id_a, id_b=id_b)
-        edges.unpersist()
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within max_iter={max_iter} "
-            f"iterations; the pair graph's diameter exceeds the budget. "
-            f"Raise max_iter (iterations needed = component diameter; "
-            f"near-dup clusters are normally shallow, so a deep graph "
-            f"usually signals threshold-too-low pair generation), or use "
-            f"duplicate_clusters_star, which converges in O(log n) rounds "
-            f"regardless of diameter."
-        )
-    edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+# star rounds between lineage truncations: without a periodic
+# localCheckpoint each round's plan nests the previous one, and deep
+# graphs OOM the DRIVER during planning, not the executors during
+# compute.  (On a real cluster with executor loss, substitute a
+# reliable `checkpoint()` against the cluster FS.)
+STAR_CHECKPOINT_EVERY = 2
 
 
 def _star_round(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1301,27 +1129,28 @@ def duplicate_clusters_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 15,
-    checkpoint_every: int = 2,
     materialize: str = "lineage",
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., 'Connected Components in MapReduce and Beyond',
-    SoCC'14 -- a public algorithm): same output contract as
-    `duplicate_clusters` ((doc_id, cluster_id = component min) for every
-    node of the pair graph), but convergence takes O(log n) ROUNDS
-    instead of graph-diameter ITERATIONS.
+    """Connected components over an undirected duplicate-pair graph:
+    the post-pair stage every dedup pipeline runs so that A~B and B~C
+    collapse to ONE survivor (pairwise keep-lowest would keep A and B).
+    Output: (doc_id, cluster_id) for every node of the pair graph,
+    cluster_id = min doc_id of its component -- deterministic, so the
+    result is differentially checkable against a recursive-CTE oracle.
 
-    Min-label propagation moves a label one hop per iteration, so a
-    path-shaped component of length d costs d shuffle rounds; the star
-    operations instead rewire whole neighborhoods onto local minima each
-    round, halving component height.  Near-dup graphs are usually
-    shallow (label propagation wins on constant factors there -- fewer
-    jobs per round); chain-shaped graphs (transcription drift, shingled
-    chunk overlaps, id-remap chains) are where this one is the only
-    shape that finishes.  Each round is two window passes plus one
-    distinct over the EDGE frame only (3 shuffles, r16 -- see
-    `_star_round`); lineage is truncated by periodic localCheckpoint
-    exactly as in the label version.
+    Algorithm: alternating large-star / small-star (Kiveris et al.,
+    'Connected Components in MapReduce and Beyond', SoCC'14 -- a public
+    algorithm), whose convergence takes O(log n) ROUNDS instead of the
+    graph-diameter ITERATIONS of min-label propagation: propagation
+    moves a label one hop per iteration, so a path-shaped component of
+    length d costs d shuffle rounds, while the star operations rewire
+    whole neighborhoods onto local minima each round, halving
+    component height.  Chain-shaped graphs (transcription drift,
+    shingled chunk overlaps, id-remap chains) finish in a few rounds
+    as well.  Each round is two window passes plus one distinct over
+    the EDGE frame only (3 shuffles, r16 -- see `_star_round`);
+    lineage is truncated every STAR_CHECKPOINT_EVERY rounds by a lazy
+    localCheckpoint.
 
     large-star(u): for every neighbor v > u, re-point v at
     m = min(N(u) ∪ {u}).  small-star(u): re-point the neighbors ≤ u
@@ -1407,7 +1236,7 @@ def duplicate_clusters_star(
         if rnd == max_rounds:
             stats.unpersist()
             break
-        if (rnd + 1) % checkpoint_every == 0:
+        if (rnd + 1) % STAR_CHECKPOINT_EVERY == 0:
             # lazy (r15): the NEXT round's probe materializes the
             # checkpoint as part of its own job, truncating lineage at
             # the same point without paying a separate barrier job per
@@ -1428,8 +1257,8 @@ def duplicate_clusters_star(
     # converged: a forest of stars, every edge = (root=x < child=y).
     # The star frame stays persisted and the result reads from it --
     # unpersisting here would force the caller's collect to recompute
-    # the whole iteration chain (same convention as duplicate_clusters'
-    # label frame); the frame is 2 longs per edge of the PAIR graph.
+    # the whole iteration chain; the frame is 2 longs per edge of the
+    # PAIR graph.
     children = edges.select(
         F.col("y").alias("doc_id"), F.col("x").alias("cluster_id")
     )
@@ -1576,12 +1405,11 @@ def duplicate_clusters_incremental(
 # cluster-label store: the materialized prior for incremental maintenance
 # ---------------------------------------------------------------------------
 
-# layout mirrors the IVF+PQ store (operators/similarity.py): versioned
-# dirs under base_path with a `_current` pointer written LAST via atomic
-# os.replace, so a reader never sees a half-written store and two
-# concurrent builders race only at the rename (the loser discards its
-# identical, deterministic build).
-_LABELS_CURRENT = "_current"
+# layout and lifecycle are the IVF+PQ store's (operators/similarity.py,
+# `publish_store_build`): versioned dirs under base_path with a
+# `_current` pointer written LAST via atomic os.replace, so a reader
+# never sees a half-written store and two concurrent builders race only
+# at the rename (the loser discards its identical, deterministic build).
 
 
 def materialize_label_store(
@@ -1605,12 +1433,11 @@ def materialize_label_store(
     amortized over every batch folded into it -- the
     materialize_ivf_pq_index posture).  Atomicity: labels land in a
     private temp dir, promoted with ONE os.rename to `v1/`, pointer
-    published LAST (atomic os.replace)."""
+    published LAST (atomic os.replace) and only once `v1/` exists."""
     import os
-    import shutil
     import uuid
 
-    if os.path.exists(os.path.join(base_path, _LABELS_CURRENT)):
+    if os.path.exists(os.path.join(base_path, _CURRENT_POINTER)):
         return
     labels = duplicate_clusters_star(
         pairs, id_a=id_a, id_b=id_b, materialize="leaf"
@@ -1618,20 +1445,7 @@ def materialize_label_store(
     os.makedirs(base_path, exist_ok=True)
     tmp = os.path.join(base_path, f".build_{uuid.uuid4().hex[:8]}")
     labels.write.mode("overwrite").parquet(os.path.join(tmp, "labels"))
-    try:
-        os.rename(tmp, os.path.join(base_path, "v1"))
-    except OSError:
-        # lost the publish race: the winner's build is bit-identical
-        # (deterministic clustering), drop ours
-        shutil.rmtree(tmp, ignore_errors=True)
-    ptr_tmp = os.path.join(
-        base_path, f".{_LABELS_CURRENT}.{uuid.uuid4().hex[:8]}"
-    )
-    with open(ptr_tmp, "w") as f:
-        f.write("v1\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(ptr_tmp, os.path.join(base_path, _LABELS_CURRENT))
+    publish_store_build(tmp, base_path)
 
 
 def read_label_store(spark, base_path: str) -> DataFrame:
@@ -1640,13 +1454,13 @@ def read_label_store(spark, base_path: str) -> DataFrame:
     as the IVF+PQ store reader."""
     import os
 
-    ptr = os.path.join(base_path, _LABELS_CURRENT)
+    ptr = os.path.join(base_path, _CURRENT_POINTER)
     with open(ptr) as f:
         version = f.read().strip()
     vdir = os.path.join(base_path, version)
     if not os.path.isdir(vdir):
         raise FileNotFoundError(
-            f"corrupt label store at {base_path}: {_LABELS_CURRENT} "
+            f"corrupt label store at {base_path}: {_CURRENT_POINTER} "
             f"points at {version!r} but that version directory does "
             "not exist"
         )

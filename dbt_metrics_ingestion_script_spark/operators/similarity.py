@@ -923,7 +923,7 @@ def kmeans_convergence(
     eagerly (three tiny rows -- the stats-aggregate collect pattern),
     then every cache is released: a lazy composition would re-derive
     round i's whole subtree once per downstream reference (the
-    duplicate_clusters round discipline, applied).  n_iter stays small
+    duplicate_clusters_star round discipline, applied).  n_iter stays small
     because the trace, not full convergence, is the product.
     """
     if n_iter < 0:
@@ -1893,6 +1893,33 @@ def ivf_pq_store_health(
     )
 
 
+def publish_store_build(tmp: str, base_path: str) -> None:
+    """Promote a finished private build dir `tmp` to `base_path/v1`
+    with ONE os.rename, then publish the `_current` pointer LAST -- the
+    lifecycle shared by every versioned store (this IVF+PQ index, the
+    cluster-label store in operators/dedup.py).  Fails closed: the
+    pointer is written only once `v1/` exists."""
+    import os
+    import shutil
+
+    v1 = os.path.join(base_path, "v1")
+    try:
+        os.rename(tmp, v1)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(v1):
+            # NOT the concurrent-winner race (v1 never landed): a
+            # genuine failure -- re-raise rather than publishing a
+            # dangling pointer at a nonexistent version (ADVICE r13)
+            raise
+        # a concurrent builder promoted its (identical, deterministic)
+        # store first; ours is redundant
+    if not os.path.exists(os.path.join(base_path, _CURRENT_POINTER)):
+        # publish LAST; also repairs a store whose builder crashed
+        # between the rename and the pointer write
+        _publish_ivf_pq_version(base_path, "v1")
+
+
 def materialize_ivf_pq_index(
     embeddings: DataFrame,
     base_path: str,
@@ -1926,7 +1953,6 @@ def materialize_ivf_pq_index(
     own write and the cells join into the codes write).
     """
     import os
-    import shutil
     import uuid
 
     if _ivf_pq_store_exists(base_path):
@@ -1969,24 +1995,7 @@ def materialize_ivf_pq_index(
         ivf_pq_index_upsert(
             upsert, tmp, m=m, dim=dim, id_col=id_col, vec_col=vec_col
         )
-    v1 = os.path.join(base_path, "v1")
-    try:
-        os.rename(tmp, v1)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(v1):
-            # NOT the concurrent-winner race (v1 never landed): a
-            # genuine failure -- re-raise rather than publishing a
-            # dangling pointer at a nonexistent version (ADVICE r13)
-            raise
-        # a concurrent builder promoted its (identical, deterministic)
-        # store first; ours is redundant
-    if os.path.isdir(v1) and not os.path.exists(
-        os.path.join(base_path, _CURRENT_POINTER)
-    ):
-        # publish LAST; also repairs a store whose builder crashed
-        # between the rename and the pointer write
-        _publish_ivf_pq_version(base_path, "v1")
+    publish_store_build(tmp, base_path)
 
 
 def ivf_pq_index_upsert(
@@ -2043,8 +2052,9 @@ def ivf_pq_index_upsert(
     # dirs x 2 parts), and every later serve paid the listing + footer
     # reads (+0.7 s, the r15/r16 upsert_served regression).  A
     # batch-sized repartition on the partition column lands exactly
-    # one file per touched directory at any batch size (AQE splits a
-    # skewed cell if one ever dominates).
+    # one file per touched directory at any batch size.  A skewed cell
+    # still lands in ONE task: AQE splits skewed join partitions, not
+    # a repartition("centroid_id") ahead of a write.
     new_asg.drop("d2").repartition("centroid_id").write.mode(
         "append"
     ).partitionBy("centroid_id").parquet(

@@ -1044,7 +1044,7 @@ def bpe_encode_vocab(
     vocab: DataFrame,
     rules: list[tuple[str, str]],
     word_col: str = "w",
-    rules_per_stage: int = 32,
+    rules_per_stage: int = 48,
 ) -> DataFrame:
     """Encode a DISTINCT-WORD vocabulary under a trained rule list,
     with the merge folds applied in bounded STAGES (VERDICT r7 item
@@ -1052,8 +1052,9 @@ def bpe_encode_vocab(
     expression tree builds generated code proportional to the rule
     count and breaks (or falls off) Janino's method-size limits far
     below a real 32k-rule tokenizer.  Here each stage chains at most
-    `rules_per_stage` folds into one projection, then materializes the
-    vocabulary-sized intermediate (`localCheckpoint`) so the next
+    `rules_per_stage` folds (default 48: Janino-safe) into one
+    projection, then materializes the vocabulary-sized intermediate
+    (`localCheckpoint`) so the next
     stage compiles against a fresh, constant-depth plan -- compile
     cost is O(rules) total instead of O(rules) in ONE compilation
     unit, and the data cost is a vocabulary-frame rewrite per stage
@@ -1082,7 +1083,6 @@ def bpe_encode_token_counts(
     rules: list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_chained_rules: int = 0,
 ) -> DataFrame:
     """Encode the corpus with a trained BPE rule list and report
     per-document sequence lengths: (doc_id, n_words, n_bpe_tokens).
@@ -1101,9 +1101,8 @@ def bpe_encode_token_counts(
     by word multiplicity [shuffle 2].  The folds are JVM codegen
     expressions -- no Python in the hot path.
 
-    Encode path (r15: the VOCABULARY path is now the default,
-    max_chained_rules=0): the distinct-word vocabulary is encoded once
-    in bounded stages (`bpe_encode_vocab`) and joined back -- the
+    Encode path: the distinct-word vocabulary is encoded once in
+    bounded stages (`bpe_encode_vocab`) and joined back -- the
     vocabulary frame is Heaps-sublinear and AQE broadcasts it when
     small.  Two independent reasons, one structural and one measured:
     a single chained expression breaks Janino's method-size limits
@@ -1112,10 +1111,10 @@ def bpe_encode_token_counts(
     is per ROW they run over -- folding per (doc, word) re-pays every
     within-corpus repetition of a word, measured 10x at sf0.1 (8 folds
     over 116k (doc, word) rows: 6.1 s; over the 31-word vocabulary +
-    broadcast join back: 0.6 s).  Setting max_chained_rules >=
-    len(rules) forces the old inline chained-fold path (kept for the
-    path-equality test and the empty-rules char baseline); equality of
-    the two paths and a 500-rule run are pinned in tests."""
+    broadcast join back: 0.6 s).  Empty `rules` run zero stages and
+    give the char-level baseline.  Equality with an independent Python
+    encoder, across stage boundaries and at 500 rules, is pinned in
+    tests."""
     words = df.select(
         F.col(id_col),
         F.explode(F.split(normalize_text(text_col), " ")).alias("w"),
@@ -1123,27 +1122,13 @@ def bpe_encode_token_counts(
     per_doc_word = words.groupBy(id_col, "w").agg(
         F.count("*").alias("n_w")
     )
-    if len(rules) > max_chained_rules:
-        # stage width: the caller's chaining bound when one was given,
-        # else the Janino-safe default (48 folds per compilation unit)
-        enc = bpe_encode_vocab(
-            per_doc_word.select("w").distinct(),
-            rules,
-            rules_per_stage=max_chained_rules or 48,
-        )
-        sized = per_doc_word.join(enc, "w").withColumn(
-            "__n_sym", F.col("n_sym")
-        )
-    else:
-        sym = F.split("w", "(?!^)(?=.)")
-        for left, right in rules:
-            sym = _merge_pair(sym, left, right)
-        sized = per_doc_word.withColumn("__n_sym", F.size(sym))
+    enc = bpe_encode_vocab(per_doc_word.select("w").distinct(), rules)
     return (
-        sized.groupBy(id_col)
+        per_doc_word.join(enc, "w")
+        .groupBy(id_col)
         .agg(
             F.sum("n_w").alias("n_words"),
-            F.sum(F.col("n_w") * F.col("__n_sym")).alias("n_bpe_tokens"),
+            F.sum(F.col("n_w") * F.col("n_sym")).alias("n_bpe_tokens"),
         )
     )
 

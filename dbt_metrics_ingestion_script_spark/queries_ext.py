@@ -143,11 +143,17 @@ def dedup_containment_pairs(spark, sf_dir):
 # A~B~C chains onto one survivor)
 # ---------------------------------------------------------------------------
 
+# pair-graph Jaccard threshold, and the simulated ingest batch of the
+# incremental queries (doc_id % _DUP_BATCH_MOD == 0); the label-store
+# path tag hashes both, so changing either names a new store
+_DUP_JACCARD_T = 0.2
+_DUP_BATCH_MOD = 7
+
 
 def _dup_clusters_oracle() -> str:
     """Recursive-CTE min-label propagation over the same Jaccard>=0.2
     edge set the pair query emits; converges to cluster_id = component
-    min, exactly what the Spark iterative loop computes."""
+    min, exactly the labels the Spark star loop computes."""
     edges = (
         _SHINGLE_CTE.replace("WITH docs AS (", "WITH RECURSIVE docs AS (", 1)
         + f"""
@@ -168,7 +174,7 @@ def _dup_clusters_oracle() -> str:
       GROUP BY 1, 2, 3, 4
     ), edges AS (
       SELECT id_a, id_b FROM jpairs
-      WHERE n_common / (n_a + n_b - n_common) >= 0.2
+      WHERE n_common / (n_a + n_b - n_common) >= {_DUP_JACCARD_T}
     )"""
     )
     return (
@@ -191,19 +197,22 @@ def _dup_clusters_oracle() -> str:
 def _dup_pair_graph(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"),
-        threshold=0.2,
+        threshold=_DUP_JACCARD_T,
         df_max=dedup.NGRAM_DF_MAX,
     )
 
 
 @register("dedup_duplicate_clusters", _dup_clusters_oracle())
 def dedup_duplicate_clusters(spark, sf_dir):
-    """Scan budget: documents ~rounds x -- iterative label propagation;
-    the audited plan inlines the per-round references, at runtime the
-    edge frame is persisted/localCheckpoint-ed so the parquet scan
-    happens once.
+    """Connected components of the near-dup pair graph, computed by the
+    star loop (`duplicate_clusters_star`) -- the same computation as
+    dedup_duplicate_clusters_star, kept under its own registered name.
+
+    Scan budget: documents ~rounds x -- O(log n) star rounds; audited
+    references are lineage text, at runtime the edge frame is
+    persisted/localCheckpoint-ed so the parquet scan happens once.
     """
-    return dedup.duplicate_clusters(_dup_pair_graph(spark, sf_dir))
+    return dedup.duplicate_clusters_star(_dup_pair_graph(spark, sf_dir))
 
 
 @register("dedup_clusters_incremental_vs_corpus", _dup_clusters_oracle())
@@ -220,7 +229,8 @@ def dedup_clusters_incremental_vs_corpus(spark, sf_dir):
     recursive-CTE clustering over the whole graph -- incremental
     maintenance must be indistinguishable from a from-scratch run."""
     pairs = _dup_pair_graph(spark, sf_dir).persist()
-    in_batch_a, in_batch_b = F.col("id_a") % 7 == 0, F.col("id_b") % 7 == 0
+    in_batch_a = F.col("id_a") % _DUP_BATCH_MOD == 0
+    in_batch_b = F.col("id_b") % _DUP_BATCH_MOD == 0
     # prior labels as a LEAF: in production they come from a
     # materialized store, not a live lineage -- and the leaf keeps this
     # composed plan flat (the star's own caches are released inside)
@@ -246,8 +256,8 @@ def _label_store_path(sf_dir: str) -> str:
 
     fp = _parquet_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     tag = hashlib.md5(
-        f"{os.path.realpath(sf_dir)}|{fp}|t0.2|df{dedup.NGRAM_DF_MAX}"
-        f"|mod7".encode()
+        f"{os.path.realpath(sf_dir)}|{fp}|t{_DUP_JACCARD_T}"
+        f"|df{dedup.NGRAM_DF_MAX}|mod{_DUP_BATCH_MOD}".encode()
     ).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), f"spark_graft_label_store_{tag}"
@@ -273,7 +283,8 @@ def dedup_clusters_incremental_vs_corpus_served(spark, sf_dir):
     loop); the one-time store build adds the corpus-side pair scan.
     The inline variant stays registered as the oracle twin."""
     pairs = _dup_pair_graph(spark, sf_dir)
-    in_batch_a, in_batch_b = F.col("id_a") % 7 == 0, F.col("id_b") % 7 == 0
+    in_batch_a = F.col("id_a") % _DUP_BATCH_MOD == 0
+    in_batch_b = F.col("id_b") % _DUP_BATCH_MOD == 0
     store = _label_store_path(sf_dir)
     dedup.materialize_label_store(
         pairs.filter(~in_batch_a & ~in_batch_b), store
@@ -286,11 +297,10 @@ def dedup_clusters_incremental_vs_corpus_served(spark, sf_dir):
 
 @register("dedup_duplicate_clusters_star", _dup_clusters_oracle())
 def dedup_duplicate_clusters_star(spark, sf_dir):
-    """Same connected-components contract as dedup_duplicate_clusters
-    (and the same recursive-CTE oracle), computed by the O(log n)-round
-    alternating large-star/small-star algorithm -- the 100 TB-safe path
-    whose round count is independent of component diameter (VERDICT r4
-    item 1: previously pytest-only, now oracle-checked).
+    """Same connected-components contract and recursive-CTE oracle as
+    dedup_duplicate_clusters (both names run the same O(log n)-round
+    alternating large-star/small-star algorithm, whose round count is
+    independent of component diameter).
 
     Scan budget: documents ~rounds x -- O(log n) star rounds over the
     persisted edge frame; audited references are lineage text, the

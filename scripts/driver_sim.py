@@ -75,6 +75,12 @@ def main() -> int:
     print(f"entry: {len(rows)} rows OK", flush=True)
 
     queries, oracles = E.queries(), E.oracle_sql()
+    # a query named on the command line but registered driver=False
+    # (no oracle) still runs, rows-only
+    from dbt_metrics_ingestion_script_spark.registry import REGISTRY
+
+    for name in sorted((only - queries.keys()) & REGISTRY.keys()):
+        queries[name] = REGISTRY[name].fn
     failed = []
     for name, fn in queries.items():
         if only and name not in only:

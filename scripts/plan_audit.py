@@ -2,7 +2,9 @@
 shuffle (non-broadcast Exchange) counts, broadcast counts, and Python
 eval presence, printed as a table.
 
-Usage: python scripts/plan_audit.py [sf_dir]
+Usage: python scripts/plan_audit.py [sf_dir] [query ...]
+
+(query names, if given, restrict the audit to those queries)
 
 This is the reproducible form of the round-6 scan-count audit: run it
 after plan-affecting changes and diff the committed PLANAUDIT_r{N}.txt.
@@ -30,13 +32,23 @@ TABLES = [
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = set(sys.argv[2:])
     spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "simple"
     )
     print(f"{'query':45s} {'scans':28s} shuf bcast pyeval ckpt")
-    for name, fn in E.queries().items():
+    queries = E.queries()
+    # a query named on the command line but registered driver=False
+    # is audited too
+    from dbt_metrics_ingestion_script_spark.registry import REGISTRY
+
+    for name in sorted((only - queries.keys()) & REGISTRY.keys()):
+        queries[name] = REGISTRY[name].fn
+    for name, fn in queries.items():
+        if only and name not in only:
+            continue
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(mode)

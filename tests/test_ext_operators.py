@@ -464,106 +464,47 @@ def test_resize_images_rejects_unknown_decode(spark):
         multimodal.resize_images(None, decode="opencv")
 
 
-def test_duplicate_clusters_collapse_chains(spark):
-    """A~B and B~C must land in ONE cluster labeled min(A,B,C), even
-    though A and C share no pair; disconnected pairs stay separate."""
-    from dbt_metrics_ingestion_script_spark.operators.dedup import duplicate_clusters
-
-    pairs = spark.createDataFrame(
-        [(10, 20), (20, 3), (50, 60), (70, 80), (80, 71)],
-        "id_a long, id_b long",
-    )
-    got = {r["doc_id"]: r["cluster_id"] for r in duplicate_clusters(pairs).collect()}
-    assert got == {3: 3, 10: 3, 20: 3, 50: 50, 60: 50, 70: 70, 71: 70, 80: 70}
-
-
-@pytest.mark.slow
-def test_duplicate_clusters_exhaustion_falls_back_to_star(spark):
-    """ADVICE r2 b + VERDICT r4 item 2: exhausting max_iter with labels
-    still moving must never return silently-wrong split clusters.  The
-    default recovery is the diameter-independent star algorithm (a
-    correct answer was computable, so compute it); on_exhaustion='raise'
-    restores the strict abort.  A 23-node chain has diameter 22 >
-    max_iter=3; the same graph converges directly (one cluster, label 0)
-    with an adequate budget."""
-    import pytest
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(22)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="converge"):
-        dedup.duplicate_clusters(chain, max_iter=3, on_exhaustion="raise")
-    with pytest.raises(ValueError, match="on_exhaustion"):
-        dedup.duplicate_clusters(chain, on_exhaustion="retry")
-    # default path: falls back to star and still produces the right answer
-    stats: dict = {}
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(chain, max_iter=3, stats=stats).collect()
-    }
-    assert labels == {i: 0 for i in range(23)}
-    assert stats == {"iterations": 3, "fell_back": True}
-    # adequate budget: label propagation converges on its own
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(chain, max_iter=30).collect()
-    }
-    assert labels == {i: 0 for i in range(23)}
-
-
-def test_duplicate_clusters_shallow_graph_never_falls_back(spark):
-    """VERDICT r4 item 2 (common-case guard): a shallow pair graph must
-    converge inside label propagation without invoking the star
-    fallback, and within diameter+1 iterations (no extra jobs in the
-    common case)."""
-    # two triangles + a pair: every component has diameter <= 2
-    g = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "id_a long, id_b long",
-    )
-    stats: dict = {}
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(g, stats=stats).collect()
-    }
-    assert labels == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-    assert stats["fell_back"] is False
-    assert stats["iterations"] <= 3  # diameter 2 + convergence probe round
-
-
-def test_duplicate_clusters_star_matches_label_propagation(spark, sf_dir):
-    """The O(log n)-round star algorithm must produce exactly the label
-    propagation clusters on the real near-dup pair graph."""
-    pairs = dedup.ngram_jaccard_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.2
-    ).persist()
-    want = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.duplicate_clusters(pairs).collect()
-    }
+@pytest.mark.parametrize(
+    "edges, want",
+    [
+        pytest.param(
+            [(10, 20), (20, 3), (50, 60), (70, 80), (80, 71)],
+            {3: 3, 10: 3, 20: 3, 50: 50, 60: 50, 70: 70, 71: 70, 80: 70},
+            id="chain_collapse",
+        ),
+        pytest.param(
+            [(i + 1, i) for i in range(1, 7)],  # 7-6-...-2-1
+            {i: 1 for i in range(1, 8)},
+            id="diameter6_path",
+        ),
+        pytest.param(
+            [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (20, 21)],
+            {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20},
+            id="two_triangles_and_pair",
+        ),
+    ],
+)
+def test_duplicate_clusters_star_components(spark, edges, want):
+    """A~B and B~C land in ONE cluster labeled min(A,B,C) even though A
+    and C share no pair; disconnected pairs stay separate; the min
+    label crosses a whole path from its far end."""
+    g = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.duplicate_clusters_star(pairs).collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.duplicate_clusters_star(g).collect()
     }
-    pairs.unpersist()
-    assert got == want and got
+    assert got == want
 
 
 @pytest.mark.slow
 def test_duplicate_clusters_star_handles_deep_chains(spark):
-    """A 60-node chain (diameter 59) exceeds label propagation's default
-    iteration budget but star-contraction needs only O(log n) rounds:
-    the case the alternative algorithm exists for.  Also checks a mixed
-    graph: chain + separate triangle + isolated pair."""
-    import pytest
-
+    """A 60-node chain (diameter 59) needs only O(log n) star rounds.
+    Also checks a mixed graph: chain + separate triangle + isolated
+    pair."""
     chain = [(i, i + 1) for i in range(59)]
     tri = [(100, 101), (101, 102), (100, 102)]
     pair = [(200, 201)]
     g = spark.createDataFrame(chain + tri + pair, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="converge"):
-        # strict mode: default max_iter=20 < diameter 59
-        dedup.duplicate_clusters(g, on_exhaustion="raise")
     want = {i: 0 for i in range(60)}
     want.update({100: 100, 101: 100, 102: 100, 200: 200, 201: 200})
     labels = {
@@ -571,24 +512,6 @@ def test_duplicate_clusters_star_handles_deep_chains(spark):
         for r in dedup.duplicate_clusters_star(g).collect()
     }
     assert labels == want
-    # VERDICT r4 item 2: the PUBLIC entry point now finishes the deep
-    # chain too, by falling back to star after exhaustion
-    labels = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(g).collect()
-    }
-    assert labels == want
-
-
-def test_duplicate_clusters_long_path(spark):
-    """Label propagation crosses a diameter-6 path (min at one end)."""
-    from dbt_metrics_ingestion_script_spark.operators.dedup import duplicate_clusters
-
-    chain = [(i + 1, i) for i in range(1, 7)]  # 7-6-...-2-1
-    got = {r["doc_id"]: r["cluster_id"] for r in duplicate_clusters(
-        spark.createDataFrame(chain, "id_a long, id_b long")
-    ).collect()}
-    assert got == {i: 1 for i in range(1, 8)}
 
 
 def _edge_df(spark, pairs):
@@ -672,6 +595,25 @@ def test_label_store_roundtrip_and_served_equivalence(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_label_store_fails_closed_when_promote_fails(spark, tmp_path, monkeypatch):
+    """A promote rename that fails with no `v1/` present is a genuine
+    failure, not a lost publish race: materialize must raise and leave
+    no `_current` pointer behind (a dangling pointer would make every
+    later serve read a nonexistent version)."""
+    import os
+
+    store = str(tmp_path / "labels_store")
+
+    def failing_rename(src, dst):
+        raise OSError("simulated promote failure")
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="simulated promote failure"):
+        dedup.materialize_label_store(_edge_df(spark, [(1, 2)]), store)
+    assert not os.path.exists(os.path.join(store, "v1"))
+    assert not os.path.exists(os.path.join(store, "_current"))
 
 
 def test_incremental_clusters_batch_only_and_empty_merge(spark):
@@ -2821,12 +2763,13 @@ def test_bpe_encode_500_rules_staged_vocab(spark):
 
 
 def test_bpe_encode_staged_vocab_equals_chained(spark):
-    """Path equality: the staged-vocabulary encode (the r15 default,
-    and in multiple stage widths) reproduces the inline chained-fold
-    result on the same rules, so the scale path is a pure physical
-    swap."""
+    """The staged-vocabulary encode equals the independent Python
+    encoder, which chains every rule in one fold: at the default stage
+    width (one stage here) and at 2 rules per stage, so stage
+    boundaries fall between merges that feed each other."""
     from dbt_metrics_ingestion_script_spark.operators.text import (
         bpe_encode_token_counts,
+        bpe_encode_vocab,
         bpe_train_local,
     )
 
@@ -2840,20 +2783,20 @@ def test_bpe_encode_staged_vocab_equals_chained(spark):
         (r["left"], r["right"])
         for r in bpe_train_local(df, n_merges=6).orderBy("rank").collect()
     ]
-    chained = {
+    got = {
         r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-        for r in bpe_encode_token_counts(
-            df, rules, max_chained_rules=len(rules)
-        ).collect()
+        for r in bpe_encode_token_counts(df, rules).collect()
     }
-    for mcr in (0, 2):
-        staged = {
-            r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-            for r in bpe_encode_token_counts(
-                df, rules, max_chained_rules=mcr
-            ).collect()
-        }
-        assert staged == chained, mcr
+    assert got == _py_bpe_encode(rows, rules)
+    words = sorted({w for _, t in rows for w in t.split()})
+    vocab = spark.createDataFrame([(w,) for w in words], "w string")
+    staged = {
+        r["w"]: r["n_sym"]
+        for r in bpe_encode_vocab(vocab, rules, rules_per_stage=2).collect()
+    }
+    assert staged == {
+        w: _py_bpe_encode([(0, w)], rules)[0][1] for w in words
+    }
 
 
 def test_rolling_features_point_in_time_no_leakage(spark):

@@ -172,11 +172,11 @@ def test_corpus_ops_agree_on_adversarial_corpora(spark, tmp_path_factory, texts)
         assert ns == no, f"{name} diverged on {texts!r}:\n{ns}\nvs\n{no}"
 
 
-@pytest.mark.slow
 def test_duplicate_clusters_chain_corpus_matches_oracle(spark, tmp_path_factory):
     """Three documents where A~B and B~C overlap enough for Jaccard>=0.2
-    but A and C don't: the recursive-CTE oracle and the iterative Spark
-    loop must both collapse them into one cluster."""
+    but A and C don't: the recursive-CTE oracle and the Spark star loop
+    (under both registered clustering names) must both collapse them
+    into one cluster."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     texts = [
         base + " one two three four five",            # A: shares core with B

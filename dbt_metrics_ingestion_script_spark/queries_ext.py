@@ -247,9 +247,9 @@ def dedup_clusters_incremental_vs_corpus(spark, sf_dir):
 def _label_store_path(sf_dir: str) -> str:
     """Deterministic per-corpus scratch location for the cluster-label
     store (the `_ivf_pq_index_path` convention: content fingerprint of
-    the source table + the pair-graph parameters, so regenerated
-    testdata or changed parameters yield a NEW store instead of
-    serving stale labels)."""
+    the source table + the pair-graph parameters + the store format
+    digest, so regenerated testdata, changed parameters or a changed
+    store layout yield a NEW store instead of serving stale labels)."""
     import hashlib
     import os
     import tempfile
@@ -257,7 +257,8 @@ def _label_store_path(sf_dir: str) -> str:
     fp = _parquet_fingerprint(os.path.join(sf_dir, "documents.parquet"))
     tag = hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{fp}|t{_DUP_JACCARD_T}"
-        f"|df{dedup.NGRAM_DF_MAX}|mod{_DUP_BATCH_MOD}".encode()
+        f"|df{dedup.NGRAM_DF_MAX}|mod{_DUP_BATCH_MOD}"
+        f"|fmt{similarity.store_format_digest()}".encode()
     ).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), f"spark_graft_label_store_{tag}"
@@ -4568,7 +4569,9 @@ def _ivf_pq_index_path(sf_dir: str, variant: str = "") -> str:
     source embeddings (size+mtime of its data files), so regenerating
     the testdata at the same path yields a NEW store location instead
     of serving a stale index past the _SUCCESS no-op check
-    (ADVICE r11)."""
+    (ADVICE r11).  It also folds in `similarity.store_format_digest()`,
+    so a change of the stored part schemas names a new store rather
+    than reading an old one through the new schemas."""
     import hashlib
     import os
     import tempfile
@@ -4576,7 +4579,8 @@ def _ivf_pq_index_path(sf_dir: str, variant: str = "") -> str:
     fp = _parquet_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
     tag = hashlib.md5(
         f"{os.path.realpath(sf_dir)}|{fp}|{variant}"
-        f"|c16|m{_PQ_M}|k{_PQ_CODES}|d{_PQ_DIM}".encode()
+        f"|c16|m{_PQ_M}|k{_PQ_CODES}|d{_PQ_DIM}"
+        f"|fmt{similarity.store_format_digest()}".encode()
     ).hexdigest()[:12]
     return os.path.join(
         tempfile.gettempdir(), f"spark_graft_ivf_pq_index_{tag}"
@@ -4602,12 +4606,14 @@ def similarity_ivf_pq_batch_topk_served(spark, sf_dir):
     that round-trip parquet bit-exactly), so the oracle replays the
     inline derivation.
 
-    Scan budget: embeddings x0 in the serving plan -- the 4-row
-    query batch is a lazy localCheckpoint (1 ckpt leaf in plan_audit;
-    one 4-row derivation job at first action; production receives the
-    batch as service input, not a corpus scan), so the plan touches
-    ONLY the stored index: assignments x2 (DPP-pruned candidates +
-    shortlist re-rank fetch), codes x1, centroids/codebooks broadcast.
+    Scan budget: embeddings x0 in the serving plan -- the serve
+    projects the 4-row query batch and lazily localCheckpoints it
+    itself (1 ckpt leaf in plan_audit; one 4-row derivation job at
+    first action, read by probes, distance tables and re-rank alike;
+    production receives the batch as service input, not a corpus
+    scan), so the plan touches ONLY the stored index: assignments x2
+    (DPP-pruned candidates + shortlist re-rank fetch), codes x1 (packed
+    once per id), centroids/codebooks broadcast as one array row each.
     The index build cost is paid once per corpus, not per batch --
     this is the production posture the inline queries' docstrings
     promise, now registry-visible.  Plan lock:
@@ -4619,10 +4625,7 @@ def similarity_ivf_pq_batch_topk_served(spark, sf_dir):
         emb, path, n_centroids=16, m=_PQ_M, n_codes=_PQ_CODES, dim=_PQ_DIM
     )
     idx = similarity.read_ivf_pq_index(spark, path)
-    # the serve stage references the query frame 3x (probes, subspace
-    # split, re-rank); without the checkpoint each reference re-scans
-    # embeddings for the same 4 rows
-    qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
+    qbatch = _min_ids_queries(emb)
     return similarity.ivf_pq_batch_serve(
         idx["assignments"],
         idx["centroids"],
@@ -4688,7 +4691,7 @@ def similarity_ivf_pq_index_upsert_served(spark, sf_dir):
         upsert=emb.where(is_batch),
     )
     idx = similarity.read_ivf_pq_index(spark, path)
-    qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
+    qbatch = _min_ids_queries(emb)
     return similarity.ivf_pq_batch_serve(
         idx["assignments"],
         idx["centroids"],
@@ -4908,7 +4911,7 @@ def similarity_ivf_pq_rebuild_served(spark, sf_dir):
         except OSError:
             shutil.rmtree(tmp_store, ignore_errors=True)
     idx = similarity.read_ivf_pq_index(spark, path)
-    qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
+    qbatch = _min_ids_queries(emb)
     return similarity.ivf_pq_batch_serve(
         idx["assignments"],
         idx["centroids"],
@@ -4979,7 +4982,7 @@ def similarity_ivf_pq_batch_topk_after_delete(spark, sf_dir):
     asg = idx["assignments"]
     if deletes is not None:
         asg = asg.join(F.broadcast(deletes), "id", "left_anti")
-    qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
+    qbatch = _min_ids_queries(emb)
     return similarity.ivf_pq_batch_serve(
         asg,
         idx["centroids"],
@@ -5079,7 +5082,7 @@ def streaming_ivf_pq_ingest_served(spark, sf_dir):
             shutil.rmtree(stage, ignore_errors=True)
             shutil.rmtree(tmp_store, ignore_errors=True)
     idx = similarity.read_ivf_pq_index(spark, path)
-    qbatch = _min_ids_queries(emb).localCheckpoint(eager=False)
+    qbatch = _min_ids_queries(emb)
     return similarity.ivf_pq_batch_serve(
         idx["assignments"],
         idx["centroids"],

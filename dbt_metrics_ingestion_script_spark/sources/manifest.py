@@ -125,13 +125,28 @@ def _arr(name: str):
     return F.coalesce(F.col(f"value.{name}"), F.array().cast(ArrayType(S))).alias(name)
 
 
-_MANIFEST_CACHE: dict[tuple[str, str], "ManifestFrames"] = {}
+_MANIFEST_CACHE: dict[
+    tuple[str, str], tuple[tuple[int, int] | None, "ManifestFrames"]
+] = {}
+
+
+def _file_stamp(path: str) -> tuple[int, int] | None:
+    """(size, mtime_ns) of a local manifest file, None for a path the
+    driver cannot stat (a remote URI)."""
+    import os
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_size, st.st_mtime_ns)
 
 
 def load_manifest(
     spark: SparkSession, path: str, use_cache: bool = True
 ) -> ManifestFrames:
-    """Parse a manifest into section frames; memoized per (session, path).
+    """Parse a manifest into section frames; memoized per (session, path)
+    and the file's (size, mtime_ns).
 
     A manifest is immutable metadata read by every Layer A operator in a
     run -- without memoization each query re-plans the multiLine JSON
@@ -143,17 +158,31 @@ def load_manifest(
 
     Keyed on applicationId (stable per SparkContext), not id(spark):
     CPython can reuse a dead session's id() for a new one, which would
-    hand out persisted frames bound to a stopped context."""
+    hand out persisted frames bound to a stopped context.  A manifest
+    rewritten at the same path changes its stat stamp (the
+    `_parquet_fingerprint` rule of queries_ext), so the memo re-parses
+    it and releases the old document's persisted frames instead of
+    returning them."""
     key = (spark.sparkContext.applicationId, path)
+    stamp = _file_stamp(path)
     if use_cache and key in _MANIFEST_CACHE:
-        return _MANIFEST_CACHE[key]
+        cached_stamp, cached = _MANIFEST_CACHE[key]
+        if cached_stamp == stamp:
+            return cached
+        for df in _persisted(cached):
+            df.unpersist()
+        del _MANIFEST_CACHE[key]
     frames = _load_manifest_uncached(spark, path)
     if use_cache:
-        for df in (frames.metrics, frames.nodes, frames.sources,
-                   frames.semantic_models, frames.parent_edges):
+        for df in _persisted(frames):
             df.persist()
-        _MANIFEST_CACHE[key] = frames
+        _MANIFEST_CACHE[key] = (stamp, frames)
     return frames
+
+
+def _persisted(frames: ManifestFrames) -> tuple[DataFrame, ...]:
+    return (frames.metrics, frames.nodes, frames.sources,
+            frames.semantic_models, frames.parent_edges)
 
 
 def _load_manifest_uncached(spark: SparkSession, path: str) -> ManifestFrames:

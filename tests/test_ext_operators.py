@@ -3034,6 +3034,43 @@ def test_ivf_pq_batch_topk_matches_single_query_path(spark, sf_dir):
         ], qid
 
 
+def test_ivf_pq_batch_serve_matches_single_query_path_shared_build(
+    spark, sf_dir
+):
+    """Default-run sibling of the slow per-query pin above: the same 3
+    queries on sf0.001, with the IVF and PQ builds lazily checkpointed
+    once and shared by both paths, so the batch serve (one pass over
+    its queries, packed-code ADC) is checked against the independent
+    single-query plan without paying four index builds."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    from dbt_metrics_ingestion_script_spark.queries_ext import (
+        _min_ids_queries,
+    )
+
+    idx = similarity.ivf_index(emb, 16, lazy_checkpoint=True)
+    pq = similarity.pq_encode(emb, lazy_checkpoint=True)
+    queries = _min_ids_queries(emb, nq=3)
+    params = dict(
+        k=10, shortlist=50, n_probe=4, round_digits=6, index=idx, pq=pq
+    )
+    batch = similarity.ivf_pq_batch_topk(emb, queries, **params).collect()
+    by_q = {}
+    for r in batch:
+        by_q.setdefault(r["query_id"], []).append(
+            (r["vec_id"], r["cosine_sim"])
+        )
+    qrows = [(r["query_id"], r["embedding"]) for r in queries.collect()]
+    assert sorted(by_q) == sorted(q for q, _ in qrows)
+    for qid, vec in qrows:
+        single_q = spark.createDataFrame(
+            [(qid, vec)], "vec_id long, embedding array<float>"
+        )
+        single = similarity.ivf_pq_topk(emb, single_q, **params).collect()
+        assert by_q[qid] == [
+            (r["vec_id"], r["cosine_sim"]) for r in single
+        ], qid
+
+
 def test_ivf_batch_topk_matches_single_query_path(spark, sf_dir):
     """Same per-query equivalence pin for the IVF-only batch path."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3769,3 +3806,41 @@ def test_ensure_scan_parallelism_guard_contract(
     stream = spark.readStream.schema("id long, doc_id long").parquet(src)
     out = ensure_scan_parallelism(stream, "doc_id")
     assert out is stream
+
+
+def test_ensure_scan_parallelism_detects_exchange_nodes_not_names(
+    spark, monkeypatch
+):
+    """The exchange guard walks plan nodes by class: a column merely
+    NAMED like an exchange no longer blocks the fan-out (the old
+    rendered-string probe bailed on it), while a real exchange --
+    shuffle, broadcast, or one inside a cached frame's plan -- still
+    returns the frame untouched."""
+    from dbt_metrics_ingestion_script_spark.operators.similarity import (
+        ensure_scan_parallelism,
+        has_exchange,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_FANOUT_TARGET_BYTES", "96")
+    named = spark.range(100).coalesce(1).select(
+        F.col("id"), F.col("id").alias("Exchange")
+    )
+    assert "Exchange" in named._jdf.queryExecution().executedPlan().toString()
+    assert not has_exchange(named)
+    assert ensure_scan_parallelism(named, "id") is not named
+    shuffled = spark.range(100).repartition(3, "id")
+    assert has_exchange(shuffled)
+    small = spark.range(5)
+    bcast = spark.range(100).join(F.broadcast(small), "id")
+    assert has_exchange(bcast)
+    assert ensure_scan_parallelism(bcast, "id") is bcast
+    cached = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    cached.cache()
+    try:
+        reader = cached.select("k", "count")
+        plan = reader._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        assert has_exchange(reader)
+        assert ensure_scan_parallelism(reader, "k") is reader
+    finally:
+        cached.unpersist()

@@ -593,3 +593,88 @@ def test_resolve_raises_clearly_on_dangling_pointer(
         f.write("v99\n")
     with pytest.raises(FileNotFoundError, match="v99"):
         similarity.resolve_ivf_pq_store(path)
+
+
+def _inferred_schemas(spark, path: str) -> dict:
+    store = similarity.resolve_ivf_pq_store(path)
+    return {
+        p: spark.read.parquet(os.path.join(store, p)).schema
+        for p in similarity._INDEX_PARTS
+    }
+
+
+def test_index_schemas_match_every_writer(spark, sf_dir, tmp_path):
+    """Reads pass `_INDEX_SCHEMAS` instead of inferring, so the constant
+    must equal what every writer produces -- materialize, upsert,
+    compact and rebuild.  A writer change fails here instead of
+    reading nulls through a stale schema.  A fresh build also lands
+    exactly one data file per cell directory in both partitioned
+    parts, whatever its task count."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    is_batch = F.col("vec_id") % 5 == 4
+    path = str(tmp_path / "store")
+    similarity.materialize_ivf_pq_index(
+        emb.where(~is_batch), path, n_centroids=8
+    )
+    store = similarity.resolve_ivf_pq_store(path)
+    for part in ("assignments", "codes"):
+        cells = [
+            d
+            for d in os.listdir(os.path.join(store, part))
+            if d.startswith("centroid_id=")
+        ]
+        assert len(cells) == 8, (part, cells)
+        for d in cells:
+            files = [
+                f
+                for f in os.listdir(os.path.join(store, part, d))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (part, d, files)
+    steps = [
+        ("materialize", lambda: None),
+        (
+            "upsert",
+            lambda: similarity.ivf_pq_index_upsert(emb.where(is_batch), path),
+        ),
+        ("compact", lambda: similarity.compact_ivf_pq_index(spark, path)),
+        (
+            "rebuild",
+            lambda: similarity.rebuild_ivf_pq_index(
+                spark, path, n_centroids=8
+            ),
+        ),
+    ]
+    for step, run in steps:
+        run()
+        assert _inferred_schemas(spark, path) == similarity._INDEX_SCHEMAS, step
+
+
+def test_store_path_changes_with_index_schemas(sf_dir, monkeypatch):
+    """Format salt: both store path tags fold in a digest of
+    `_INDEX_SCHEMAS`, so a layout change names a NEW store instead of
+    serving an old one through the new schemas."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from dbt_metrics_ingestion_script_spark import queries_ext
+
+    sf = sf_dir
+    before = (
+        queries_ext._ivf_pq_index_path(sf),
+        queries_ext._label_store_path(sf),
+    )
+    assert before == (
+        queries_ext._ivf_pq_index_path(sf),
+        queries_ext._label_store_path(sf),
+    )
+    changed = dict(similarity._INDEX_SCHEMAS)
+    changed["centroids"] = StructType(
+        [*changed["centroids"].fields, StructField("n", LongType())]
+    )
+    monkeypatch.setattr(similarity, "_INDEX_SCHEMAS", changed)
+    after = (
+        queries_ext._ivf_pq_index_path(sf),
+        queries_ext._label_store_path(sf),
+    )
+    assert after[0] != before[0]
+    assert after[1] != before[1]

@@ -158,3 +158,55 @@ def test_registered_served_query_prunes_partitions(spark, sf_dir):
     # index scans: pruned candidates + shortlist re-rank fetch
     assert plan.count("/assignments") == 2, plan
     assert plan.count("/codes") == 1, plan
+
+
+def test_batch_serve_frame_builds_without_jobs(spark, sf_dir, tmp_path):
+    """Building a serve frame over a stored index runs no Spark job:
+    the part reads carry their schemas (no inference job) and the
+    serve's own lazy checkpoint of the query projection adds no
+    exchange.  The jobs run at the first action, and the rows equal
+    the inline-build batch path over the same corpus."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    store = str(tmp_path / "store")
+    similarity.materialize_ivf_pq_index(emb, store, n_centroids=8)
+    vecs = [
+        r["embedding"]
+        for r in emb.orderBy("vec_id").limit(3).select("embedding").collect()
+    ]
+    sc = spark.sparkContext
+    group = "ivf-serve-frame-build"
+    sc.setJobGroup(group, "serve frame build")
+    try:
+        # the service-input shape: a batch handed over as Python rows
+        queries = spark.createDataFrame(
+            [(i, v) for i, v in enumerate(vecs)],
+            "query_id long, embedding array<float>",
+        )
+        idx = similarity.read_ivf_pq_index(spark, store)
+        served = similarity.ivf_pq_batch_serve(
+            idx["assignments"],
+            idx["centroids"],
+            idx["codes"].select("id", "subspace", "code"),
+            idx["codebooks"],
+            queries,
+            k=5,
+            shortlist=20,
+            n_probe=2,
+            round_digits=6,
+        )
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        rows = served.collect()
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    inline = similarity.ivf_pq_batch_topk(
+        emb,
+        queries,
+        k=5,
+        shortlist=20,
+        n_centroids=8,
+        n_probe=2,
+        round_digits=6,
+    ).collect()
+    assert len(rows) == 15
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, inline))

@@ -100,3 +100,22 @@ def test_cli_empty_manifest_exits_nonzero(spark, tmp_path):
     p = tmp_path / "empty_manifest.json"
     p.write_text('{"metrics": {}, "nodes": {}, "sources": {}}')
     assert main(["--manifest", str(p), "--dry-run"]) == 1
+
+
+def test_load_manifest_sees_a_rewrite_at_the_same_path(spark, tmp_path):
+    """The memo keys on the file's size and mtime as well as the path: a
+    manifest rewritten in place is parsed again, never answered from
+    the old document's frames."""
+    import json
+
+    from dbt_metrics_ingestion_script_spark.sources.manifest import load_manifest
+
+    with open(qa.FIXTURE) as f:
+        doc = json.load(f)
+    path = tmp_path / "manifest.json"
+    path.write_text(json.dumps(doc))
+    assert load_manifest(spark, str(path)).metrics.count() == 5
+    assert load_manifest(spark, str(path)) is load_manifest(spark, str(path))
+    doc["metrics"].pop(sorted(doc["metrics"])[0])
+    path.write_text(json.dumps(doc, indent=1))
+    assert load_manifest(spark, str(path)).metrics.count() == 4

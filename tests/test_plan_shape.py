@@ -884,9 +884,10 @@ def test_ivf_pq_batch_topk_single_plan_group_limits(spark):
     """Batch ANN serving is ONE plan keyed by query_id -- no per-query
     job loop: the per-query shortlist and top-k rank filters compile to
     WindowGroupLimit (map-side partial top-k, so one hot query cannot
-    push its whole candidate list through a sort), the B x m x n_codes
-    ADC distance table and the query/probe frames ride broadcasts, and
-    the ADC sum is partial-aggregated per (query, id)."""
+    push its whole candidate list through a sort), the per-query ADC
+    distance tables (one m x n_codes array per query) and the
+    query/probe frames ride broadcasts, and the ADC sum is a per-row
+    fold over each id's packed codes -- no (query, id) re-aggregation."""
     plan = plan_of(run(spark, "similarity_ivf_pq_batch_topk"))
     assert "WindowGroupLimit" in plan
     assert "BroadcastExchange" in plan

@@ -53,34 +53,73 @@ def _serve_stream(spark, sf_dir, tmp_path):
     return emb, store, qbatch, out_dir, plans
 
 
+def _meta(node, key: str) -> str:
+    opt = node.metadata().get(key)
+    return opt.get() if opt.isDefined() else ""
+
+
+def _scan_below(node):
+    """The file scan directly under `node`, looking through the
+    row/codegen adapters Spark puts between an operator and its scan;
+    None if the child is anything else."""
+    child = node.child()
+    while child.getClass().getSimpleName() in (
+        "ColumnarToRowExec",
+        "InputAdapter",
+        "WholeStageCodegenExec",
+    ):
+        child = child.child()
+    if child.getClass().getSimpleName() == "FileSourceScanExec":
+        return child
+    return None
+
+
+def _is_stored_part(scan) -> bool:
+    loc = _meta(scan, "Location")
+    return "/assignments" in loc or "/codes" in loc
+
+
 def test_stream_serve_prunes_partitions_per_batch(spark, sf_dir, tmp_path):
     emb, store, qbatch, out_dir, plans = _serve_stream(
         spark, sf_dir, tmp_path
     )
     assert plans, "no micro-batch plan captured"
     for plan in plans:
-        # 1. probed cells arrive as PARTITION filters on the stored scans
-        part_lines = [
-            ln for ln in plan.splitlines() if "PartitionFilters" in ln
+        nodes = list(similarity.plan_nodes(plan))
+        scans = [
+            n
+            for n in nodes
+            if n.getClass().getSimpleName() == "FileSourceScanExec"
         ]
-        assert part_lines, plan
-        assert any("centroid_id" in ln for ln in part_lines), plan
-        # 2. ... and never as a post-scan data filter.  Catalyst
-        # propagates the isin constraint onto the KB-sized probes frame
-        # (fused with its __rn <= n_probe rank filter) -- that one is
-        # benign and identifiable by the __rn reference; nothing else
-        # may filter centroid_id
-        assert not [
-            ln
-            for ln in plan.splitlines()
-            if "Condition" in ln
-            and "centroid_id" in ln
-            and "__rn" not in ln
-        ], plan
-        pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-        assert all("centroid_id" not in ln for ln in pushed), plan
+        stored = [n for n in scans if _is_stored_part(n)]
+        assert stored, plan.toString()
+        # 1. probed cells arrive as PARTITION filters on the stored scans
+        for scan in stored:
+            assert "centroid_id" in _meta(scan, "PartitionFilters"), (
+                plan.toString()
+            )
+        # 2. ... and never as a post-scan data filter: no Filter on
+        # centroid_id sits directly on a stored-part scan, and no scan
+        # pushes centroid_id as a data filter.  (Catalyst may propagate
+        # the isin constraint onto the KB-sized probe frame; that
+        # Filter reads no stored part.)
+        for n in nodes:
+            if n.getClass().getSimpleName() != "FilterExec":
+                continue
+            if "centroid_id" not in n.condition().toString():
+                continue
+            scan = _scan_below(n)
+            assert scan is None or not _is_stored_part(scan), (
+                plan.toString()
+            )
+        for scan in scans:
+            assert "centroid_id" not in _meta(scan, "PushedFilters"), (
+                plan.toString()
+            )
         # 3. the serving plan never scans the corpus
-        assert plan.count("embeddings.parquet") == 0, plan
+        assert not [
+            s for s in scans if "embeddings.parquet" in _meta(s, "Location")
+        ], plan.toString()
 
     # 4. row parity with the batch serve over the same (unfiltered) store
     idx = similarity.read_ivf_pq_index(spark, store)
@@ -89,7 +128,7 @@ def test_stream_serve_prunes_partitions_per_batch(spark, sf_dir, tmp_path):
         idx["centroids"],
         idx["codes"].select("id", "subspace", "code"),
         idx["codebooks"],
-        qbatch.localCheckpoint(eager=False),
+        qbatch,
         k=5,
         shortlist=20,
         n_probe=2,

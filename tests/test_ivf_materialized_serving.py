@@ -164,49 +164,49 @@ def test_batch_serve_frame_builds_without_jobs(spark, sf_dir, tmp_path):
     """Building a serve frame over a stored index runs no Spark job:
     the part reads carry their schemas (no inference job) and the
     serve's own lazy checkpoint of the query projection adds no
-    exchange.  The jobs run at the first action, and the rows equal
-    the inline-build batch path over the same corpus."""
+    exchange -- for a batch handed over as Python rows and for the
+    registered queries' sort-limit batch alike.  The jobs run at the
+    first action, and both frames return the rows of the inline-build
+    batch path over the same corpus."""
+    from dbt_metrics_ingestion_script_spark.queries_ext import (
+        _min_ids_queries,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
     store = str(tmp_path / "store")
     similarity.materialize_ivf_pq_index(emb, store, n_centroids=8)
-    vecs = [
-        r["embedding"]
-        for r in emb.orderBy("vec_id").limit(3).select("embedding").collect()
-    ]
+    batch = _min_ids_queries(emb, nq=3)
+    rows_in = [(r["query_id"], r["embedding"]) for r in batch.collect()]
+    params = dict(k=5, shortlist=20, n_probe=2, round_digits=6)
     sc = spark.sparkContext
     group = "ivf-serve-frame-build"
     sc.setJobGroup(group, "serve frame build")
     try:
-        # the service-input shape: a batch handed over as Python rows
-        queries = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vecs)],
-            "query_id long, embedding array<float>",
-        )
         idx = similarity.read_ivf_pq_index(spark, store)
-        served = similarity.ivf_pq_batch_serve(
-            idx["assignments"],
-            idx["centroids"],
-            idx["codes"].select("id", "subspace", "code"),
-            idx["codebooks"],
-            queries,
-            k=5,
-            shortlist=20,
-            n_probe=2,
-            round_digits=6,
-        )
+        served = [
+            similarity.ivf_pq_batch_serve(
+                idx["assignments"],
+                idx["centroids"],
+                idx["codes"].select("id", "subspace", "code"),
+                idx["codebooks"],
+                queries,
+                **params,
+            )
+            for queries in (
+                # the service-input shape: a batch of Python rows
+                spark.createDataFrame(
+                    rows_in, "query_id long, embedding array<float>"
+                ),
+                batch,
+            )
+        ]
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        rows = served.collect()
+        got = [sorted(map(tuple, df.collect())) for df in served]
         assert sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     inline = similarity.ivf_pq_batch_topk(
-        emb,
-        queries,
-        k=5,
-        shortlist=20,
-        n_centroids=8,
-        n_probe=2,
-        round_digits=6,
+        emb, batch, n_centroids=8, **params
     ).collect()
-    assert len(rows) == 15
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, inline))
+    assert len(inline) == 15
+    assert got == [sorted(map(tuple, inline))] * 2
